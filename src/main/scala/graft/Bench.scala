@@ -72,8 +72,9 @@ object Bench {
     // rounds running (PERF_r18/r19: prev/now_bench_ok false, per_query empty).
     // Print the driver-visible line with 3-decimal seconds — 1 ms precision,
     // far below the measured +-15% run-to-run noise floor — which roughly
-    // halves the line. Full precision is preserved in the file artifact below
-    // (BENCH_rNN_full.json), unchanged from prior rounds, so nothing is lost.
+    // halves the line. The file artifact below (BENCH_rNN_full.json) keeps
+    // 9 decimals — 1 ns, far finer than any timer here — so the rounding of
+    // the stdout line loses nothing the file does not still carry.
     println(lineAt(3))
     // The driver's captured artifact truncates long stdout tails (BENCH_r09
     // lost half the per-query map), so also persist the full line to a file

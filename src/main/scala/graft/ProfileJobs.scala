@@ -64,6 +64,11 @@ object ProfileJobs {
     // SPARK_GRAFT_STREAM_DEBUG=1 instead: StreamingQueries.runToBatch
     // prints each batch's durationMs + state rows from inside the child.
 
+    // Listener events post asynchronously: deliver every event posted so
+    // far, so a label's counters hold exactly its own jobs.
+    def drainBus(): Unit =
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 30000)
+
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       // warmup (codegen/caches), same as Bench
@@ -71,12 +76,15 @@ object ProfileJobs {
       System.gc()
       try fn(spark, sfDir).count()
       catch { case scala.util.control.NonFatal(e) => println(s"warmup err: $e") }
+      // Reset AFTER the drain: the warmup's (and the previous label's) late
+      // events would otherwise land in this label's rows.
+      drainBus()
+      starts.clear()
       rowsLock.synchronized { rows = Seq.empty }
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(300)
+      drainBus()
       println(s"\n===== $n  total=${f"$total%.3f"}s =====")
       val snap = rowsLock.synchronized(rows)
       snap.sortBy(_._1).foreach { case (id, secs, _, desc) =>

@@ -95,13 +95,19 @@ object RelJoinScale {
       }
     })
 
+    // Deliver every posted listener event, so each label's counter holds
+    // exactly its own tasks.
+    def drainBus(): Unit =
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 30000)
+
     def timed(label: String, df: => DataFrame): Double = {
       spark.sparkContext.setJobDescription(s"reljoin-scale $label")
+      drainBus() // late events of the fixture writes or the previous label
       shuffleWrite.set(0L)
       val t0 = System.nanoTime()
       val rows = df.collect()
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain task-end events
+      drainBus()
       println(f"RELJOINSCALE $label orders=$nOrders wall=$secs%.2f " +
         f"shuffleMB=${shuffleWrite.get / 1e6}%.1f first=${rows.headOption.mkString}")
       secs

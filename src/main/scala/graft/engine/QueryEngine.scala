@@ -48,7 +48,15 @@ final case class DatasetSpec(groupIdColumn: String, timestampColumn: String,
 /**
  * The planned query: every output is a lazily-evaluated DataFrame, so Catalyst
  * sees the complete plan (scan → window → filter → aggregate) and can push
- * filters/pruning into the parquet scan.
+ * filters/pruning into the parquet scan. Executed independently, each frame
+ * re-runs that whole plan — library callers (battery rows, tests) get
+ * exactly these frames.
+ *
+ * A multi-frame window-plan query also carries [[shared]]: the one row set
+ * all its frames read, plus the function that builds every frame from it.
+ * [[graft.result.ResultJson.build]] materializes that set once per request
+ * and collects the frames rebuilt over it concurrently; the frames above
+ * are that same function applied to the lazy row set.
  */
 final case class PlannedQuery(
     /** All rows of groups matching the conditions (reference semantics:
@@ -69,7 +77,24 @@ final case class PlannedQuery(
       * "routed-sequence", "routed-funnel", or
       * "routed-sequence+routed-funnel" when both fast paths fired in one
       * query. Surfaced by the HTTP API's per-query stats block. */
-    plan: String = "window")
+    plan: String = "window",
+    /** Set for window-plan queries with a window stack (conditions or a
+      * funnel) and more than one output frame; None keeps the frames
+      * above as the only plan (single-frame queries, routed plans, which
+      * share through their own retained tables, and condition-free
+      * aggregations over the plain scan). */
+    shared: Option[SharedRows] = None)
+
+/**
+ * The row set a multi-frame window-plan query's outputs all read — the
+ * funnel's group-flagged rows (matched rows plus one `__f_p<j>` flag per
+ * step) when the query has a window funnel, else the matched rows — and
+ * `frames`, which builds every output frame over any frame with that
+ * schema. `frames(rows)` is the library plan; `frames(materialized)` reads
+ * the window stack's result instead of re-running it per frame. The
+ * result's own `shared` is None.
+ */
+final case class SharedRows(rows: DataFrame, frames: DataFrame => PlannedQuery)
 
 /**
  * Spark-native implementation of the reference's query semantics
@@ -166,6 +191,22 @@ final case class PlannedQuery(
  * serving surface. `withWindowPlan` pins the general plan for callers that want
  * the single-exchange shape regardless (small inputs: the typed
  * aggregation's fixed overhead costs ~20% at sf0.1).
+ *
+ * **One window stack per request (multi-frame window queries).** Every
+ * output frame — summary, each aggregation, the funnel counts, each
+ * step/end aggregation — reads the same row set: the window funnel's
+ * group-flagged rows, or the matched rows without a funnel. Executed as
+ * independent frames, each one re-runs scan → gid exchange → sort → window
+ * stack. For a window-plan query with a window stack and more than one
+ * frame, [[run]] therefore also returns that row set and the one function
+ * that builds every frame from it ([[PlannedQuery.shared]]);
+ * `ResultJson.build` materializes the set once per request and runs the
+ * rebuilt frames concurrently. `run` itself stays free of Spark actions.
+ * The library frames are the same function over the lazy row set, so
+ * battery rows and tests see the plans they always had. Routed plans keep
+ * their own sharing (retained survivor and max-step tables), and
+ * condition-free aggregations read the plain scan, so neither carries a
+ * shared set.
  */
 final class QueryEngine(spec: DatasetSpec,
                         groupRowCap: Option[(Int, String)] = None,
@@ -217,7 +258,9 @@ final class QueryEngine(spec: DatasetSpec,
   def withRoutingThreshold(bytes: Long): QueryEngine =
     new QueryEngine(spec, groupRowCap, routing, bytes)
 
-  /** Plan `q` against `df`. Pure plan construction — nothing is executed. */
+  /** Plan `q` against `df`. Pure plan construction — nothing is executed,
+    * including for the [[PlannedQuery.shared]] row set, which the caller
+    * materializes (see class doc "One window stack per request"). */
   def run(df: DataFrame, q: GraftQuery): PlannedQuery = {
     val framed = q.timeframe match {
       case Some(Timeframe(from, to)) =>
@@ -421,12 +464,6 @@ final class QueryEngine(spec: DatasetSpec,
         }
       }
 
-    val summary = matched.agg(
-      count_distinct(col(gid)).as("matching_groups"),
-      count(lit(1)).as("matching_group_rows"))
-
-    val aggs = q.aggregations.map(a => aggName(a) -> runAggregation(matched, a))
-
     // Funnel routing (class doc): counts come from the single-candidate-
     // pass funnelCounts; step/end aggregations (r14) no longer pin the
     // window plan — their inputs are recovered from the same candidate
@@ -437,11 +474,7 @@ final class QueryEngine(spec: DatasetSpec,
         f.steps.exists(_.rowFound) && fastPathTypesOk(matched) &&
         !matched.columns.contains("__fn_gid") &&
         bigEnough(matched))
-    val (funnelDf, funnelAggs) = q.funnel match {
-      case Some(f) if funnelRouted => routedFunnel(matched, f)
-      case Some(f)                 => planFunnel(matched, f)
-      case None                    => (None, Nil)
-    }
+    val windowFunnel = q.funnel.filter(_ => !funnelRouted)
 
     val planLabel = (
       (if (routedSeqIdx.nonEmpty) Seq("routed-sequence") else Nil) ++
@@ -449,7 +482,29 @@ final class QueryEngine(spec: DatasetSpec,
       case Nil   => "window"
       case parts => parts.mkString("+")
     }
-    PlannedQuery(matched, summary, aggs, funnelDf, funnelAggs, planLabel)
+
+    // Every output frame is a function of one row set: the window
+    // funnel's flagged rows, or the matched rows.
+    val origCols = matched.columns.toIndexedSeq
+    val rowSet = windowFunnel.fold(matched)(planFunnel(matched, _, origCols))
+    def frames(rows: DataFrame): PlannedQuery = {
+      val matchedView = windowFunnel.fold(rows)(_ => rows.select(origCols.map(col): _*))
+      val summary = matchedView.agg(
+        count_distinct(col(gid)).as("matching_groups"),
+        count(lit(1)).as("matching_group_rows"))
+      val aggs = q.aggregations.map(a => aggName(a) -> runAggregation(matchedView, a))
+      val (funnelDf, funnelAggs) = q.funnel match {
+        case Some(f) if funnelRouted => routedFunnel(matchedView, f)
+        case Some(f)                 => funnelFrames(rows, f, origCols)
+        case None                    => (None, Nil)
+      }
+      PlannedQuery(matchedView, summary, aggs, funnelDf, funnelAggs, planLabel)
+    }
+    val planned = frames(rowSet)
+    val shareable = planLabel == "window" &&
+      (q.conditions.nonEmpty || q.funnel.nonEmpty) &&
+      (q.aggregations.nonEmpty || q.funnel.nonEmpty)
+    if (shareable) planned.copy(shared = Some(SharedRows(rowSet, frames))) else planned
   }
 
   /** The general (window) condition plan: one group-constant flag column
@@ -708,13 +763,13 @@ final class QueryEngine(spec: DatasetSpec,
   // ------------------------------------------------------------------- funnel
 
   /**
-   * Funnel (reference F1-F4, engine/query_engine.py:294-321): over the rows of
-   * condition-matching groups, compute per-step passed flags with the same
-   * chained-window machinery, then aggregate all steps in ONE pass:
-   * `count_distinct(when(passed_i, gid))` / `sum(when(passed_i, 1))` per step,
-   * unpivoted to (step, step_groups, step_rows) rows.
+   * Funnel (reference F1-F4, engine/query_engine.py:294-321), window part:
+   * over the rows of condition-matching groups, compute per-step passed
+   * flags with the same chained-window machinery. Returns those rows
+   * (`origCols`) plus one group-constant boolean `__f_p<j>` per step — the
+   * flagged row set [[funnelFrames]] reads.
    */
-  private def planFunnel(rows: DataFrame, f: Funnel): (Option[DataFrame], Seq[(String, DataFrame)]) = {
+  private def planFunnel(rows: DataFrame, f: Funnel, origCols: Seq[String]): DataFrame = {
     var cur = rows
     var anchor: Option[String] = None
     var firstAnchor: Option[String] = None
@@ -745,10 +800,20 @@ final class QueryEngine(spec: DatasetSpec,
       stepPassed += withDuration
     }
 
+    val flags = stepPassed.zipWithIndex.map { case (p, j) => p.as(s"__f_p$j") }
+    cur.select(origCols.map(col) ++ flags: _*)
+  }
+
+  /**
+   * Funnel output frames over [[planFunnel]]'s flagged rows: all step
+   * counts in ONE pass — `count_distinct(when(passed_i, gid))` /
+   * `sum(when(passed_i, 1))` per step, unpivoted to (step, step_groups,
+   * step_rows) rows — and each step/end aggregation over the rows whose
+   * step flag holds, projected back to `origCols`.
+   */
+  private def funnelFrames(flagged: DataFrame, f: Funnel, origCols: Seq[String])
+      : (Option[DataFrame], Seq[(String, DataFrame)]) = {
     val n = f.steps.size
-    val flagged = stepPassed.zipWithIndex.foldLeft(cur) { case (d, (p, j)) =>
-      d.withColumn(s"__f_p$j", p)
-    }
     val aggExprs = (0 until n).flatMap { j =>
       Seq(
         count_distinct(when(col(s"__f_p$j"), col(gid))).as(s"__g$j"),
@@ -766,15 +831,14 @@ final class QueryEngine(spec: DatasetSpec,
       .select(explode(array(stepStructs: _*)).as("s"))
       .select(col("s.step"), col("s.step_groups"), col("s.step_rows"))
 
-    val origCols: IndexedSeq[Column] = rows.columns.map(col).toIndexedSeq
+    def passed(j: Int): DataFrame =
+      flagged.filter(col(s"__f_p$j")).select(origCols.map(col): _*)
     val stepAggs: Seq[(String, DataFrame)] = for {
       j <- 0 until n
       a <- f.stepAggregations
-    } yield s"step${j}_${aggName(a)}" ->
-      runAggregation(flagged.filter(col(s"__f_p$j")).select(origCols: _*), a)
+    } yield s"step${j}_${aggName(a)}" -> runAggregation(passed(j), a)
     val endAggs: Seq[(String, DataFrame)] = f.endAggregations.map { a =>
-      s"end_${aggName(a)}" ->
-        runAggregation(flagged.filter(col(s"__f_p${n - 1}")).select(origCols: _*), a)
+      s"end_${aggName(a)}" -> runAggregation(passed(n - 1), a)
     }
     (Some(funnelDf), stepAggs ++ endAggs)
   }

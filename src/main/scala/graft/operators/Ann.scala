@@ -204,6 +204,13 @@ object Ann {
     *    ascending group id. Float summation follows a fixed tree either
     *    way — same data, same partitioning ⇒ same bits.
     *
+    * The two regimes sum in DIFFERENT trees (one left fold vs per-group
+    * folds merged), so their results are bit-identical to each other only
+    * when every partial sum is exactly representable (integer-valued
+    * doubles below 2^53, as in AnnMergeSpec's equality test). For general
+    * doubles they agree to rounding — a few ulps per merged level — not
+    * bit for bit; each regime on its own stays deterministic.
+    *
     * Driver memory is O(min(P, maxDriverBytes/model) × model) ≤ 64 MB of
     * partials plus the result — never O(P × model). */
   private[graft] def mergeStatPartials(

@@ -205,7 +205,14 @@ object Dedup {
     * index storage makes them shuffle-free). Pass `corpusCounts` — the
     * per-(band, bucket) size aggregate a deployment stores alongside the
     * index — to skip recomputing it, leaving the candidate join as the
-    * only index scan. */
+    * only index scan.
+    *
+    * The result is `localCheckpoint`ed EAGERLY: this call runs the
+    * candidate job before it returns, and the returned frame's lineage is
+    * cut at executor-local blocks. Those blocks cannot be recomputed, so
+    * losing an executor that holds them fails every later action on the
+    * frame — rerun the batch; the checkpoint trades that recovery for the
+    * plan truncation described in the body. */
   def incrementalCandidates(corpusBuckets: DataFrame, batchBuckets: DataFrame,
                             maxBucket: Int = 1000,
                             corpusCounts: Option[DataFrame] = None): DataFrame =

@@ -311,7 +311,7 @@ object SequenceMatch {
   }
 
   /** Counts-only funnel twin of the engine's window-stack funnel
-    * (QueryEngine.planFunnel, reference F1): per step, the number of
+    * (QueryEngine.planFunnel/funnelFrames, reference F1): per step, the number of
     * groups whose greedy anchor chain reaches that step and the total
     * rows of those groups — output (step, step_groups, step_rows),
     * schema-identical to the engine's funnel result. Semantics notes:
@@ -361,7 +361,7 @@ object SequenceMatch {
     val absentMs = steps.indexWhere(_.rowFound) - 1
     val joined = counts.join(maxStep, Seq("g"), "left")
       .select(coalesce(col("__max_step"), lit(absentMs)).as("__ms"), col("__cnt"))
-    // Empty-input semantics must mirror planFunnel's aggregates exactly
+    // Empty-input semantics must mirror funnelFrames' aggregates exactly
     // (fuzz-caught, twice): count over empty = 0 for step_groups (the
     // window plan's count_distinct); and since r16 BOTH plans coalesce
     // the row sum to 0 on an empty matched set — a funnel over zero rows

@@ -1,6 +1,6 @@
 package graft.result
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
 
 import graft.engine.PlannedQuery
 
@@ -9,8 +9,9 @@ import graft.engine.PlannedQuery
  * (frocket/common/tasks/query.py:96-140 + serializable.py:76-98: camelCase
  * keys, null-stripping, per-value dicts keyed by stringified values).
  *
- * This executes the planned DataFrames (the only place the engine calls an
- * action) and assembles the reference-shaped response:
+ * This executes the planned DataFrames (with the shared row set's
+ * materialization below, the only place the engine calls an action) and
+ * assembles the reference-shaped response:
  * {
  *   "query":  {"matchingGroups": n, "matchingGroupRows": n,
  *              "aggregations": [{"name":..., "value"|"values": ...}]},
@@ -20,26 +21,79 @@ import graft.engine.PlannedQuery
  */
 object ResultJson {
 
-  def build(plan: PlannedQuery): String = {
-    val s = plan.summary.collect()(0)
-    val parts = new StringBuilder
-    parts ++= s"""{"query": {"matchingGroups": ${s.getLong(0)}, "matchingGroupRows": ${s.getLong(1)}"""
-    if (plan.aggregations.nonEmpty) {
-      parts ++= s""", "aggregations": [${plan.aggregations.map((aggJson _).tupled).mkString(", ")}]"""
-    }
-    parts ++= "}"
-    plan.funnel.foreach { f =>
-      val steps = f.collect().sortBy(_.getInt(0)).map { r =>
-        s"""{"sequenceGroups": ${r.getLong(1)}, "sequenceRowCount": ${r.getLong(2)}}"""
-      }
-      parts ++= s""", "funnel": {"sequence": [${steps.mkString(", ")}]"""
-      if (plan.funnelAggregations.nonEmpty)
-        parts ++= s""", "aggregations": [${plan.funnelAggregations.map((aggJson _).tupled).mkString(", ")}]"""
-      parts ++= "}"
-    }
-    parts ++= "}"
-    parts.toString
+  /** Execute `plan` and render its response. A plan without a shared row
+    * set collects its frames one after another, in response order. With
+    * one ([[graft.engine.PlannedQuery.shared]]), the row set is
+    * materialized once, the frames are rebuilt over it and collected
+    * concurrently, one new thread per frame, and rendered in the same
+    * fixed order — the same bytes as the serial rendering. */
+  def build(plan: PlannedQuery): String = plan.shared match {
+    case None => render(plan, _.map(_()))
+    case Some(shared) =>
+      // Materialize BEFORE the fan-out: frames started first would block
+      // on the checkpoint's block locks while holding task slots.
+      // localCheckpoint, not persist: a cached plan is served by the
+      // CacheManager to any concurrent request whose plan is equal, which
+      // makes one request's physical plan (and its float summation order)
+      // depend on other requests. These blocks belong to this request and
+      // are freed when its Caches scope exits (or at Caches.drain). They
+      // live only in executor storage: an executor lost before the frames
+      // finish fails the request (the lineage is truncated), it never
+      // answers wrongly — retry the request.
+      val rows = graft.util.Caches.track(shared.rows.localCheckpoint(eager = true))
+      render(shared.frames(rows), concurrently)
   }
+
+  /** Collect every frame of `p` through `collect` (frame thunks in
+    * response order → their rendered JSON, in the same order) and assemble
+    * the response. */
+  private def render(p: PlannedQuery, collect: Seq[() => String] => Seq[String]): String = {
+    def agg(named: (String, DataFrame)): () => String = () => aggJson(named._1, named._2)
+    val parts = collect(
+      Seq(() => summaryJson(p.summary)) ++ p.aggregations.map(agg) ++
+        p.funnel.map(f => () => stepsJson(f)) ++ p.funnelAggregations.map(agg))
+    val (aggs, funnelParts) = parts.tail.splitAt(p.aggregations.size)
+    val out = new StringBuilder
+    out ++= s"""{"query": {${parts.head}"""
+    if (aggs.nonEmpty) out ++= s""", "aggregations": [${aggs.mkString(", ")}]"""
+    out ++= "}"
+    funnelParts.headOption.foreach { steps =>
+      out ++= s""", "funnel": {"sequence": [$steps]"""
+      if (funnelParts.tail.nonEmpty)
+        out ++= s""", "aggregations": [${funnelParts.tail.mkString(", ")}]"""
+      out ++= "}"
+    }
+    out ++= "}"
+    out.toString
+  }
+
+  /** Run each thunk on its own new thread and return the results in input
+    * order. New threads, not a pool: Spark local properties are inherited
+    * at thread creation, so every frame's jobs carry the caller's
+    * properties — JobStats.measure's id, job group, tracing tags. Every
+    * thread is joined before the first failure is rethrown. */
+  private def concurrently(tasks: Seq[() => String]): Seq[String] = {
+    val results = new Array[String](tasks.size)
+    val failures = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => try results(i) = task() catch { case e: Throwable => failures(i) = e },
+        s"graft-result-frame-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
+    results.toSeq
+  }
+
+  private def summaryJson(summary: DataFrame): String = {
+    val s = summary.collect()(0)
+    s""""matchingGroups": ${s.getLong(0)}, "matchingGroupRows": ${s.getLong(1)}"""
+  }
+
+  private def stepsJson(funnel: DataFrame): String =
+    funnel.collect().sortBy(_.getInt(0)).map { r =>
+      s"""{"sequenceGroups": ${r.getLong(1)}, "sequenceRowCount": ${r.getLong(2)}}"""
+    }.mkString(", ")
 
   /** Append `"key": valueJson` as a trailing top-level field of an
     * already-serialized JSON object. The checked replacement for slicing
@@ -60,7 +114,7 @@ object ResultJson {
 
   /** One aggregation result: scalar → "value"; per-value → "values" dict
     * with stringified keys (reference behavior, query_engine.py:281). */
-  private def aggJson(name: String, df: org.apache.spark.sql.DataFrame): String = {
+  private def aggJson(name: String, df: DataFrame): String = {
     val rows = df.collect()
     val cols = df.columns
     if (cols.length == 1) {

@@ -74,7 +74,12 @@ object Caches {
   }
 
   /** Register `ds` for release WITHOUT persisting it — for frames whose
-    * storage is already bound elsewhere (localCheckpoint blocks). */
+    * storage is already bound elsewhere (localCheckpoint blocks). This is
+    * the request-PRIVATE form: unlike [[retain]]'s CacheManager entry,
+    * which any concurrent plan-equal query reads too, a checkpoint's
+    * blocks are reachable only through the frame that made them — the
+    * form `ResultJson.build` uses for a request's shared row set, so no
+    * other request's plan depends on it. */
   def track[T](ds: Dataset[T]): Dataset[T] = synchronized {
     currentBin += ds
     ds

@@ -35,6 +35,31 @@ class AnnMergeSpec extends SparkSpec {
     assert(gs2.toSeq == gs.toSeq && gc2.toSeq == gc.toSeq)
   }
 
+  test("mergeStatPartials: non-integer sums agree across regimes to rounding") {
+    // Fractional doubles: the flat fold and the grouped two-level fold
+    // round in different places, so only approximate agreement is
+    // promised across regimes; each regime alone is still bit-stable.
+    val sumLen = 5
+    val cntLen = 2
+    val partials = spark.sparkContext.parallelize(0 until 41, 41).map { pid =>
+      (pid,
+        Array.tabulate(sumLen)(j => math.sin(pid * 1.7 + j) * 1e3 + 0.1 * j),
+        Array.tabulate(cntLen)(j => (pid * 3 + j).toLong))
+    }
+    val (fs, fc) = Ann.mergeStatPartials(partials, sumLen, cntLen)
+    val tinyBudget = (sumLen + cntLen) * 8L * 4
+    val (gs, gc) = Ann.mergeStatPartials(partials, sumLen, cntLen,
+      maxDriverBytes = tinyBudget)
+    assert(gc.toSeq == fc.toSeq, "integer counts must match exactly")
+    fs.zip(gs).foreach { case (f, g) =>
+      assert(math.abs(f - g) <= 1e-9 * math.max(1.0, math.abs(f)),
+        s"grouped sum $g strays from flat sum $f beyond rounding")
+    }
+    val (gs2, _) = Ann.mergeStatPartials(partials, sumLen, cntLen,
+      maxDriverBytes = tinyBudget)
+    assert(gs2.toSeq == gs.toSeq, "grouped regime must be deterministic")
+  }
+
   test("mergeStatPartials: grouped path with more groups than occupied partitions") {
     // Empty partitions must contribute nothing and not crash the group fold.
     val partials = spark.sparkContext.parallelize(Seq(
