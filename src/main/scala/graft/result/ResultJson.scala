@@ -138,8 +138,11 @@ object ResultJson {
     case other               => quote(String.valueOf(other))
   }
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
+  /** The one JSON string literal writer: escapes quote, backslash and
+    * EVERY control character (< 0x20), passes everything else — non-ASCII
+    * included — through raw. A null renders as the string "null". */
+  def quote(s: String): String =
+    "\"" + String.valueOf(s).flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"

@@ -5,13 +5,16 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.Catalog
 import graft.engine.{DatasetSpec, QueryEngine}
 import graft.query.{QueryParser, QueryValidationException, SchemaValidator}
 import graft.result.{JobStats, ResultJson}
+import graft.result.ResultJson.{quote => q}
 
 /**
  * HTTP API front — parity with the reference's Flask apiserver
@@ -34,9 +37,14 @@ import graft.result.{JobStats, ResultJson}
  * The Spark driver hosts the server; queries run as ordinary Spark jobs.
  * At 100 TB a query takes minutes — `stream`/`async` are how clients
  * actually call this (the reference's run_streamable, apiserver.py:125-172);
- * the sync path stays for small interactive queries. Repeated queries can
- * opt into the versioned result cache (`resultCacheSize` — see the field
- * scaladoc below).
+ * the sync path stays for small interactive queries.
+ *
+ * Server-side query state — the versioned result cache with its
+ * single-flight latch, per-registration DataFrame handles and async job
+ * payloads — lives in three instances of ONE bounded future-valued store
+ * ([[FutureStore]]; see "stores" below), the role the reference gives its
+ * TTL'd Redis datastore. Repeated queries opt into the result cache with
+ * `resultCacheSize`.
  */
 final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int = 0,
                       catalogStore: Option[String] = None,
@@ -49,7 +57,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                         * (GRAFT_ROUTING_MIN_BYTES in ApiServerMain). */
                       routingMinBytes: Option[Long] = None,
                       /** Entries in the versioned query-result cache;
-                        * 0 (default) disables. See `resultCache` below —
+                        * 0 (default) disables. See `results` below —
                         * sound under the reference's dataset-immutability
                         * contract. GRAFT_RESULT_CACHE_SIZE in
                         * ApiServerMain. */
@@ -60,8 +68,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                         * high-cardinality column) could pin GBs on the
                         * driver. Oversized results are still served (and
                         * still coalesce concurrent identical requests via
-                        * the in-flight future) — they just don't persist in
-                        * the LRU. GRAFT_RESULT_CACHE_MAX_ENTRY_BYTES in
+                        * the in-flight future) — they just aren't kept.
+                        * GRAFT_RESULT_CACHE_MAX_ENTRY_BYTES in
                         * ApiServerMain. */
                       resultCacheMaxEntryBytes: Long = 8L << 20,
                       /** HTTP worker threads. The measured serving floor
@@ -123,7 +131,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                         * ApiServerMain. */
                       maxBodyBytes: Int = 8 << 20,
                       /** Byte budget over retained async RESULTS (r17) —
-                        * see `retainedResultBytes`. Oldest payloads are
+                        * see `payloads`. Oldest payloads are
                         * dropped past it (job entries stay, flagged
                         * "resultEvicted"); the newest completion is always
                         * retained. GRAFT_ASYNC_RESULTS_MAX_BYTES in
@@ -137,8 +145,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                         * forever. The reference expires task results by
                         * Redis TTL (redis_store.py:174-180,253-275); here
                         * payloads older than the TTL are dropped lazily —
-                        * on status reads, metrics scrapes, and inside the
-                        * retention critical section — so an idle server's
+                        * on status reads, metrics scrapes and retention —
+                        * so an idle server's
                         * retained-bytes gauge returns to 0 on the next
                         * observation. The job ENTRY stays (stage DONE,
                         * "resultEvicted": true), same late-poller contract
@@ -218,22 +226,20 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
   def stop(): Unit = {
     server.stop(0)
     if (pool != null) pool.shutdown()
-    // shutdownNow: stop() must not wait for queued async jobs; running
-    // queries' waiters are covered by the in-flight latch's
-    // belt-and-braces completeExceptionally.
+    // shutdownNow: stop() must not wait for queued async jobs; a running
+    // query that dies fails its latch, which answers its waiters.
     if (asyncPool != null) asyncPool.shutdownNow()
   }
 
   /** Graceful stop (r16): drain in-flight work for up to `drainSec`
-    * before tearing down — an abrupt `stop()` can abandon a coalesce
-    * winner mid-latch (waiters are then failed by the belt-and-braces
-    * completeExceptionally, but a drain answers them instead). Stops
-    * accepting connections immediately, lets active HTTP exchanges and
-    * already-RUNNING async jobs finish within the budget, then force-
-    * stops whatever remains. QUEUED async jobs also run if the budget
-    * permits (pool shutdown drains its queue); leftovers are dropped —
-    * a restarted server has a fresh registry anyway, matching the
-    * reference, whose async state dies with the apiserver process.
+    * before tearing down — an abrupt `stop()` can kill a coalesce winner
+    * mid-latch (its waiters are then failed; a drain answers them
+    * instead). Stops accepting connections immediately, lets active HTTP
+    * exchanges and already-RUNNING async jobs finish within the budget,
+    * then force-stops whatever remains. QUEUED async jobs also run if the
+    * budget permits (pool shutdown drains its queue); leftovers are
+    * dropped — a restarted server has a fresh registry anyway, matching
+    * the reference, whose async state dies with the apiserver process.
     * Returns true iff every submitted async job completed within the
     * budget (false = something was force-dropped). The budget is SHARED
     * across the two waits (r17): `server.stop` can itself block up to
@@ -257,111 +263,15 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
 
   // ------------------------------------------------------------ async jobs
 
-  private final case class AsyncJob(
-      id: String, dataset: String,
-      @volatile var stage: String,
-      @volatile var result: Option[String] = None,
-      @volatile var error: Option[String] = None,
-      @volatile var resultBytes: Long = 0L,
-      @volatile var resultEvicted: Boolean = false,
-      /** Wall-clock completion instant, set under resultEvictLock at
-        * retain time — the TTL sweep's age basis. 0 = not yet DONE. */
-      @volatile var doneAtMs: Long = 0L)
+  /** Registry entry of an async job. Its payload lives in `payloads`: a
+    * DONE job whose id the store no longer holds was evicted. */
+  private final case class AsyncJob(id: String, dataset: String,
+                                    @volatile var stage: String,
+                                    @volatile var error: Option[String] = None)
 
   private val jobs = new ConcurrentHashMap[String, AsyncJob]()
   private val jobSeq = new AtomicLong()
 
-  /** UTF-8 byte budget over RETAINED async results (r17): the registry
-    * keeps each DONE job's full result string until registry eviction —
-    * ~1000 finished entries × an unbounded body (countPerValue over a
-    * high-cardinality column is multi-MB) is the last unbounded
-    * driver-memory vector on the serving surface (the result cache has
-    * its per-entry ceiling for exactly this reason). Past the budget the
-    * OLDEST retained result payloads are dropped — the job entry stays
-    * (stage DONE, done:true) with "resultEvicted": true in its status, so
-    * a late poller learns to re-run instead of 404ing. The NEWEST
-    * completion is always retained even if it alone exceeds the budget:
-    * async delivery IS the one-shot persistence of that result — evicting
-    * it before anyone polled would silently destroy completed work, so
-    * the bound is max(budget, largest single result). The reference's
-    * analog is Redis task-result TTL eviction. */
-  private val retainedResultBytes = new AtomicLong()
-  private val resultEvictLock = new Object
-
-  private def retainResult(job: AsyncJob, r: String): Unit = {
-    val bytes = utf8Length(r) // O(|r|) scan stays outside the lock
-    // The retain (result/resultBytes/budget writes) and the eviction sweep
-    // run as ONE critical section on resultEvictLock. Two races otherwise:
-    // a concurrent dropRetained between `result = Some(r)` and the budget
-    // addAndGet releases a stale 0 and strands the payload's bytes in the
-    // counter forever; and two simultaneous completions' sweeps could each
-    // evict the OTHER's just-retained payload, breaking the newest-always-
-    // kept invariant. Serializing completions makes "newest" well-defined:
-    // a sweep can only ever see payloads retained strictly before its own.
-    resultEvictLock.synchronized {
-      // Expired payloads release their budget BEFORE the byte sweep runs:
-      // stale bytes must never force eviction of a fresh completion.
-      ttlSweepLocked()
-      job.result = Some(r)
-      job.resultBytes = bytes
-      job.stage = "DONE"
-      job.doneAtMs = System.currentTimeMillis()
-      val total = retainedResultBytes.addAndGet(bytes)
-      if (total > asyncResultsMaxBytes) {
-        import scala.jdk.CollectionConverters._
-        val retained = jobs.values.asScala
-          .filter(j => j.result.isDefined && (j ne job))
-          .toSeq.sortBy(_.id.drop(1).toLong)
-        val it = retained.iterator
-        while (retainedResultBytes.get() > asyncResultsMaxBytes && it.hasNext)
-          dropRetained(it.next())
-      }
-    }
-  }
-
-  /** Lazy TTL sweep over retained result payloads (r19) — called on the
-    * read paths (status polls, metrics scrapes) and inside the retention
-    * critical section, so expiry needs no timer thread: the next
-    * observation of the registry is what ages payloads out, the same
-    * lazy-expiry shape as the result-byte budget. O(registry) per call,
-    * bounded by the ~1500-entry registry cap. */
-  private def sweepExpiredResults(): Unit =
-    if (asyncResultTtlSec > 0) resultEvictLock.synchronized { ttlSweepLocked() }
-
-  /** The sweep body; caller must hold resultEvictLock. */
-  private def ttlSweepLocked(): Unit = if (asyncResultTtlSec > 0) {
-    val cutoff = System.currentTimeMillis() - asyncResultTtlSec * 1000L
-    val it = jobs.values.iterator()
-    while (it.hasNext) {
-      val j = it.next()
-      if (j.result.isDefined && j.doneAtMs <= cutoff) dropRetained(j)
-    }
-  }
-
-  /** Drop a job's retained result payload and release its budget share —
-    * idempotent and locked, so the byte-budget sweep and registry
-    * eviction can't double-release one payload between them. */
-  private def dropRetained(j: AsyncJob): Unit = resultEvictLock.synchronized {
-    if (j.result.isDefined) {
-      j.result = None
-      j.resultEvicted = true
-      retainedResultBytes.addAndGet(-j.resultBytes)
-    }
-  }
-
-  /** Exact UTF-8 length without materializing the byte copy a
-    * multi-megabyte result's getBytes would allocate. */
-  private def utf8Length(s: String): Long = {
-    var i = 0; var n = 0L
-    while (i < s.length) {
-      val c = s.charAt(i)
-      // Surrogates count 2 each so a pair sums to its true 4 UTF-8 bytes.
-      n += (if (c < 0x80) 1 else if (c < 0x800) 2
-            else if (Character.isSurrogate(c)) 2 else 3)
-      i += 1
-    }
-    n
-  }
   /** Jobs admitted but not yet finished (QUEUED + RUNNING) — the quantity
     * `asyncQueueMax` bounds (see submitAsync). Incremented at admission,
     * decremented when the job's runnable exits either way. */
@@ -371,82 +281,71 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     * shutdown path reports FAILED jobs so a drain that technically
     * completed every runnable but let the queries inside them die (e.g.
     * Spark torn down mid-drain) is visible, not silently "drained". */
-  def asyncJobCounts: Map[String, Int] = {
-    import scala.jdk.CollectionConverters._
+  def asyncJobCounts: Map[String, Int] =
     jobs.values.asScala.toSeq.groupBy(_.stage).map { case (k, v) => k -> v.size }
-  }
 
-  // ---------------------------------------------------------- result cache
+  // ---------------------------------------------------------------- stores
+  //
+  // All server-side query state lives in three instances of one bounded
+  // future-valued store ([[FutureStore]]), as the reference keeps it in one
+  // TTL'd datastore (redis_store.py). Every key is versioned by the
+  // registration (`registeredAt`) or is a fresh job id, and `unregister`
+  // sweeps each store with one call. A value is kept only if its key still
+  // maps to the future it completed, so a computation that finishes after
+  // the sweep answers its waiters but never re-inserts the dead entry.
 
-  /** Cache/latch key: dataset name + registration version + the parsed
-    * query's case-class AST, compared STRUCTURALLY (r16). The r15 key
-    * rendered the AST through case-class `toString`, which does not quote
-    * embedded strings — a filter value containing AST-rendering text
-    * (`")), RowFilter("`…) could make two structurally different queries
-    * render identical keys, serving one query's cached result to the
-    * other (and riding its single-flight latch). The AST already has
-    * structural equality/hashCode, so the key holds it directly — no
-    * string rendering, no injection surface (pinned by the
-    * toString-collision test in ApiServerSpec). */
-  private final case class QueryKey(dataset: String, registeredAt: Long,
-                                    query: graft.query.QueryAst.GraftQuery)
+  /** Versioned query results (extension): (body WITHOUT the per-execution
+    * stats block, plan). The reference's analog is the worker-side parquet
+    * part cache (part_loader.py LRU); both lean on the same contract — a
+    * registered dataset's files are IMMUTABLE, updating data means
+    * re-registering under a new DatasetId (dataset.py:36-53
+    * `DatasetId.now()`), so a new registeredAt makes new [[QueryKey]]s and
+    * stale entries age out of the LRU; two textual spellings of one query
+    * share an entry. Every battery query is deterministic
+    * (exact aggregations; top-K has a total-order tie-break), so a hit is
+    * bit-identical to a re-run; at 100 TB it answers a repeated dashboard
+    * query at the HTTP floor instead of re-scanning the corpus.
+    *
+    * Its in-flight futures are the single-flight latch: N concurrent
+    * requests for the SAME cold key — hardest right after a
+    * re-registration invalidates a popular key (the thundering herd) —
+    * run ONE execution; the rest await it and are answered from its value
+    * (counted as cache hits plus the coalesced counter). A failure reaches
+    * every waiter (same deterministic query, same dataset version) and
+    * frees the key. Only used when `resultCacheSize` > 0: coalescing would
+    * otherwise break the every-query-executes stats contract uncached
+    * clients rely on. `resultCacheMaxEntryBytes` is measured on the UTF-8
+    * encoding (bodies carry raw non-ASCII). */
+  private[server] val results = new FutureStore[QueryKey, (String, String)](
+    maxEntries = resultCacheSize, maxValueBytes = resultCacheMaxEntryBytes,
+    weigh = r => FutureStore.utf8Length(r._1))
 
-  /** Versioned query-result cache (extension). The reference's analog is
-    * the worker-side parquet part cache (part_loader.py LRU), and both
-    * lean on the same contract: a registered dataset's files are IMMUTABLE
-    * — updating data means re-registering under a new DatasetId
-    * (dataset.py:36-53 `DatasetId.now()`). The key is therefore a
-    * [[QueryKey]] — re-registration invalidates naturally (new
-    * registeredAt → new keys; stale entries age out of the LRU), and two
-    * textual spellings of one query share an entry. Values are final
-    * result bodies WITHOUT the per-execution stats block, plus the plan
-    * that produced them. Every battery query is deterministic (exact
-    * aggregations; top-K has a total-order tie-break), so a hit is
-    * bit-identical to a re-run. At 100 TB a repeated dashboard query
-    * re-scans the corpus — minutes of cluster time; this answers it at the
-    * HTTP floor. Access-order LRU bounded at `resultCacheSize`, 0 disables. */
-  private val resultCache: java.util.Map[QueryKey, (String, String)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[QueryKey, (String, String)](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[QueryKey, (String, String)]): Boolean =
-          size() > resultCacheSize
-      })
+  /** Per-registration DataFrame handles (r16): every uncached query paid
+    * `Catalog.load` — a parquet footer/file-index read that runs a small
+    * Spark job on multi-part datasets — before its first real job (~10% of
+    * the measured ~270ms serving floor; BENCH.md §"Serving-path latency
+    * floor"). A DataFrame is an immutable logical plan over the listing
+    * captured at load, stable for a given (name, registeredAt) by the same
+    * immutability contract; a re-registration misses (pinned in
+    * ApiServerSpec). Plan-sized, so 16 entries; always on. A failed load is
+    * never kept. */
+  private val handles = new FutureStore[(String, Long), DataFrame](maxEntries = 16)
 
-  /** Single-flight latch (with the cache on): N concurrent requests for
-    * the SAME cold key would each run the full query — at 100 TB that's N
-    * simultaneous corpus scans for one dashboard panel, hit hardest right
-    * after a re-registration invalidates a popular key (the thundering
-    * herd). The first request computes; the rest await its future and are
-    * answered from the fresh value (counted as cache hits, plus the
-    * coalesced counter). An execution failure propagates to every waiter
-    * (same deterministic query, same dataset version) and the latch is
-    * dropped, so the next fresh request retries. Off when the cache is
-    * off: coalescing would silently break the every-query-executes stats
-    * contract uncached clients rely on. */
-  private val inFlight =
-    new ConcurrentHashMap[QueryKey, java.util.concurrent.CompletableFuture[(String, String)]]()
-
-  /** Per-registration DataFrame handle cache (r16, probe-first): every
-    * uncached query paid `Catalog.load` — a parquet footer/file-index
-    * read that runs a small Spark job on multi-part datasets — before
-    * its first real job (~10% of the measured ~270ms serving floor; the
-    * A/B is in BENCH.md §"Serving-path latency floor"). A DataFrame is
-    * an immutable logical plan over the listing captured at load, and
-    * the registration contract makes that listing stable for a given
-    * (name, registeredAt): files never change under a registration —
-    * updates re-register (dataset.py:36-53), which changes registeredAt
-    * and naturally misses this cache (pinned in ApiServerSpec). Handles
-    * are plan-sized (no data pinned), so a small LRU bounds driver
-    * footprint; always on. Cache hits still mark the dataset used for
-    * the unregister safety interval. */
-  private val dfHandles: java.util.Map[(String, Long), org.apache.spark.sql.DataFrame] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), org.apache.spark.sql.DataFrame](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), org.apache.spark.sql.DataFrame]): Boolean =
-          size() > 16
-      })
+  /** Async job payloads, by job id (r17, r19): ~1000 finished registry
+    * entries × an unbounded body (countPerValue over a high-cardinality
+    * column is multi-MB) would be unbounded driver memory, so payloads are
+    * held to `asyncResultsMaxBytes` of UTF-8, oldest completion dropped
+    * first. The NEWEST completion is always kept even if it alone exceeds
+    * the budget: async delivery IS the one-shot persistence of that result,
+    * and evicting it before anyone polled would destroy completed work.
+    * `asyncResultTtlSec` bounds for how LONG — the reference expires task
+    * results by Redis TTL (redis_store.py:174-180,253-275), and a status
+    * poll or metrics scrape past it sees the payload gone. Either way the
+    * job entry stays DONE and its status says "resultEvicted", so a late
+    * poller re-runs instead of reading a 404. */
+  private val payloads = new FutureStore[String, String](
+    maxTotalBytes = asyncResultsMaxBytes, ttlSec = asyncResultTtlSec,
+    weigh = FutureStore.utf8Length)
 
   private def handle(ex: HttpExchange): Unit =
     try {
@@ -465,9 +364,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
         case _ => respond(ex, 404, """{"errorMessage": "not found"}""")
       }
     } catch {
-      case e: QueryValidationException =>
-        respond(ex, 400, s"""{"errorMessage": ${q(e.getMessage)}}""")
-      case e: Catalog.RegistrationException =>
+      case e @ (_: QueryValidationException | _: Catalog.RegistrationException) =>
         respond(ex, 400, s"""{"errorMessage": ${q(e.getMessage)}}""")
       case e: com.fasterxml.jackson.core.JacksonException =>
         respond(ex, 400, s"""{"errorMessage": ${q("malformed JSON: " + e.getOriginalMessage)}}""")
@@ -476,11 +373,14 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
         // the client is still sending.
         respond(ex, 413, s"""{"errorMessage": ${q(e.getMessage)}}""")
       case e: Throwable =>
-        respond(ex, 500, s"""{"errorMessage": ${q(String.valueOf(e.getMessage))}}""")
+        respond(ex, 500, s"""{"errorMessage": ${q(e.getMessage)}}""")
     } finally ex.close()
 
   private final class BodyTooLargeException(limit: Int) extends RuntimeException(
     s"request body exceeds the $limit-byte limit")
+
+  private def dataset(name: String): Catalog.RegisteredDataset =
+    Catalog.get(name).getOrElse(throw QueryValidationException("schema", s"Unknown dataset '$name'"))
 
   private def arg(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getQuery).toSeq
@@ -572,30 +472,21 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                | "errorMessage": "Dataset was last used ${sinceSec.get} seconds ago, which is less than safety interval $unregisterSafetySec. Use the 'force' parameter to unregister anyway."}""".stripMargin)
         else {
           Catalog.unregister(name)
-          // Sweep the serving caches (r17). Correctness never depended on
-          // this — every key is registeredAt-versioned and the name lookup
-          // fails post-unregister — but the handle LRU would otherwise pin
-          // the dead registration's logical plan + file index until churn
-          // evicted it, and its result-cache entries are unreachable
-          // driver memory. The in-flight sweep only removes the LATCH
-          // (new arrivals can't coalesce onto it); a winner mid-execution
-          // still completes its future for the waiters already holding it,
-          // and its own compare-and-remove no-ops harmlessly.
-          dfHandles.synchronized {
-            dfHandles.keySet().removeIf(k => k._1 == name)
-          }
-          resultCache.synchronized {
-            resultCache.keySet().removeIf(k => k.dataset == name)
-          }
-          inFlight.keySet().removeIf(k => k.dataset == name)
+          // Sweep the stores (r17). Correctness never depended on this —
+          // every key is registeredAt-versioned and the name lookup fails
+          // post-unregister — but the dead registration's handle (logical
+          // plan + file index) and results would otherwise stay pinned
+          // until LRU churn. A query still running for it answers its
+          // waiters, and its late completion keeps nothing (see `results`).
+          handles.removeIf(_._1 == name)
+          results.removeIf(_.dataset == name)
           respond(ex, 200,
             s"""{"success": true, "datasetFound": true, "datasetLastUsed": ${lastUsed.map(_.toString).getOrElse("null")}}""")
         }
     }
 
   private def schema(ex: HttpExchange, name: String): Unit = {
-    val ds = Catalog.get(name).getOrElse(
-      throw QueryValidationException("schema", s"Unknown dataset '$name'"))
+    val ds = dataset(name)
     if (!boolArg(ex, "full")) {
       // Short schema (reference DatasetShortSchema, dataset.py:142-150).
       // Parquet/Spark has no pandas "category" dtype, so sourceCategoricals
@@ -633,8 +524,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
   }
 
   private def parts(ex: HttpExchange, name: String): Unit = {
-    val ds = Catalog.get(name).getOrElse(
-      throw QueryValidationException("schema", s"Unknown dataset '$name'"))
+    val ds = dataset(name)
     // Hadoop FS listing — works for local paths and s3a alike (reference
     // DatasetPartsInfo with naming method LIST, dataset.py:81-96).
     val path = new org.apache.hadoop.fs.Path(ds.basepath)
@@ -656,51 +546,44 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
 
   /** Plan + execute a query; `emptyBody` serves GET empty-query. */
   private def query(ex: HttpExchange, name: String, emptyBody: Boolean): Unit = {
-    val ds = Catalog.get(name).getOrElse(
-      throw QueryValidationException("schema", s"Unknown dataset '$name'"))
-    val bodyText = if (emptyBody) "{}" else readBody(ex)
-    val parsed = QueryParser.parse(bodyText)
+    val ds = dataset(name)
+    val parsed = QueryParser.parse(if (emptyBody) "{}" else readBody(ex))
     SchemaValidator.validateTimeframeScale(parsed, ds.minTimestamp, ds.maxTimestamp)
 
     // Cache key captured with the SAME catalog snapshot the query runs on
     // (ds fetched once at request entry): registeredAt versions the entry.
     val cacheKey = QueryKey(ds.name, ds.registeredAt, parsed)
 
-    // Answer from a (body, plan) already paid for by someone else — a
-    // cache hit or a coalesced wait. Zero-cost stats block,
+    // The (body, plan) answer plus its stats block. "plan" names WHICH
+    // plan answered (r14): routing is deliberately invisible in the
+    // results — the operability surface is the stats block, where "plan"
+    // rides as a trailing key. An answer someone else paid for — a cache
+    // hit or a coalesced wait (no `stats`) — gets a zero-cost block,
     // schema-identical to a real run's (clients read
     // stats.rowsScanned/coreSecs as the cost basis — a hit's cost IS
-    // zero), with "cached": true and the plan that produced the entry.
-    def cachedResponse(body: String, firedPlan: String): String = {
+    // zero), with "cached": true; it is still a use for the unregister
+    // safety interval.
+    def withStats(answer: (String, String), stats: Option[JobStats.Snapshot]): String = {
       mQueries.incrementAndGet()
-      mCacheHits.incrementAndGet()
-      // A cached query is still a use for the unregister safety interval.
-      Catalog.touch(name)
-      ResultJson.addTopLevelField(body, "stats",
-        JobStats.Snapshot(0, 0, 0, 0, 0, 0, 0)
-          .toJsonWith("plan" -> q(firedPlan), "cached" -> "true"))
+      if (stats.isEmpty) { mCacheHits.incrementAndGet(); Catalog.touch(name) }
+      ResultJson.addTopLevelField(answer._1, "stats",
+        stats.getOrElse(JobStats.Snapshot(0, 0, 0, 0, 0, 0, 0))
+          .toJsonWith("plan" -> q(answer._2), "cached" -> stats.isEmpty.toString))
     }
 
     def runQuery(): ((String, String), JobStats.Snapshot) = {
       // Loaded on the result-cache miss path only (a hit must not pay the
       // parquet footer/file-index read — the cache test's zero-jobs
       // assertion watches exactly this), and even misses reuse the
-      // per-registration handle (see dfHandles): the footer/index read
-      // happens once per (name, registeredAt), not once per query.
+      // per-registration handle (see `handles`): the footer/index read
+      // happens once per (name, registeredAt), not once per query. A
+      // handle hit is still a use for the unregister safety interval.
       // Load through the ds SNAPSHOT bound at request entry, never by
       // name (r16 race fix): a re-registration landing mid-request would
       // otherwise swap the basepath under this request's registeredAt —
-      // a torn version that would also poison the handle cache's key.
-      val df = {
-        val hk = (ds.name, ds.registeredAt)
-        val cached = dfHandles.get(hk)
-        if (cached != null) { Catalog.touch(name); cached }
-        else {
-          val loaded = Catalog.load(spark, ds)
-          dfHandles.put(hk, loaded)
-          loaded
-        }
-      }
+      // a torn version that would also poison the handle store's key.
+      Catalog.touch(name)
+      val df = handles.getOrCompute((ds.name, ds.registeredAt))(Catalog.load(spark, ds))
       // The registration-validated day-partition declaration flows into
       // the engine here — timeframe queries over partitionByDay layouts
       // prune whole day directories on the serving path too.
@@ -720,15 +603,11 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       // query's finally unpersist another's in-flight shared
       // candidate-pass table (perf-only, but it silently re-introduced
       // the per-frame recomputation the cache exists to avoid).
-      val result = try graft.util.Caches.scoped(JobStats.measure(spark) {
+      val result = graft.util.Caches.scoped(JobStats.measure(spark) {
         val planned = engine.runValidated(df, parsed)
         (ResultJson.build(planned), planned.plan)
-      }) catch { case e: Throwable =>
-        mQueryErrors.incrementAndGet()
-        throw e
-      }
+      })
       val stats = result._2
-      mQueries.incrementAndGet()
       mQueryMs.addAndGet(stats.wallTimeMs)
       mRowsScanned.addAndGet(stats.rowsScanned)
       mBytesScanned.addAndGet(stats.bytesScanned)
@@ -737,99 +616,27 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       result
     }
 
-    // "plan" names WHICH plan answered (r14): routing is deliberately
-    // invisible in the results — the operability surface is the stats
-    // block, where "plan" rides as a trailing key.
-    def freshResponse(body: String, firedPlan: String, stats: JobStats.Snapshot): String =
-      ResultJson.addTopLevelField(body, "stats",
-        stats.toJsonWith("plan" -> q(firedPlan), "cached" -> "false"))
-
+    // With the cache on, identical requests share one execution: a kept
+    // result answers at once, and a request arriving while the same key is
+    // running awaits it (counted coalesced whatever the outcome). A
+    // propagated failure is this client's own failure too — N herding
+    // clients seeing the one failed scan is N failed requests — and is the
+    // winner's own exception, so the status code matches (400 stays 400).
+    // The wait is TIMED (r16): a waiter holds an HTTP worker thread, so an
+    // untimed wait on a wedged winner would starve the status/metrics
+    // endpoints under a small pool. Past `coalesceWaitSec` the waiter runs
+    // the query itself — uncoalesced but correct — and its result settles
+    // the wedged latch (r17), so later arrivals hit instead of re-executing
+    // serially. The cache off, every request executes.
     def execute(): String = {
-      val hit = if (resultCacheSize > 0) resultCache.get(cacheKey) else null
-      if (hit != null) cachedResponse(hit._1, hit._2)
-      else if (resultCacheSize > 0) {
-        val fresh = new java.util.concurrent.CompletableFuture[(String, String)]()
-        val winner = inFlight.putIfAbsent(cacheKey, fresh)
-        if (winner != null) {
-          // Coalesced: an identical query is executing right now — await
-          // it instead of running a second full scan. Counted coalesced
-          // whatever the outcome (the request DID ride the latch); a
-          // propagated failure is this client's own visible failure too,
-          // so it counts in graft_query_errors_total — N herding clients
-          // seeing the one failed scan is N failed requests. The
-          // ExecutionException unwraps to the winner's own exception so
-          // the waiter's status code matches (400 stays 400). The wait is
-          // TIMED (r16): a waiter holds an HTTP worker thread, so an
-          // untimed get on a wedged winner would starve the status/metrics
-          // endpoints forever under a small pool — past `coalesceWaitSec`
-          // the waiter gives up the latch and executes the query itself
-          // (uncoalesced but correct; the belt-and-braces
-          // completeExceptionally in the winner's finally covers the
-          // abandoned-future case well before this ceiling).
-          mCoalesced.incrementAndGet()
-          try {
-            val (body, firedPlan) =
-              try winner.get(coalesceWaitSec.toLong, java.util.concurrent.TimeUnit.SECONDS)
-              catch {
-                case e: java.util.concurrent.ExecutionException =>
-                  mQueryErrors.incrementAndGet()
-                  throw e.getCause
-              }
-            cachedResponse(body, firedPlan)
-          } catch {
-            case _: java.util.concurrent.TimeoutException =>
-              // Before paying a full scan, re-check the cache (r17): the
-              // winner — or an earlier timed-out waiter — may have
-              // completed and cached just after this waiter's deadline.
-              val late = resultCache.get(cacheKey)
-              if (late != null) cachedResponse(late._1, late._2)
-              else {
-                val (pair, stats) = runQuery()
-                // Cache the fallback's result too (r17, same byte
-                // ceiling): with a wedged winner holding the latch, every
-                // subsequent waiter times out — without this put each one
-                // would re-execute serially instead of hitting the cache.
-                if (pair._1.getBytes(StandardCharsets.UTF_8).length <= resultCacheMaxEntryBytes)
-                  resultCache.put(cacheKey, pair)
-                freshResponse(pair._1, pair._2, stats)
-              }
-          }
-        } else {
-          try {
-            // Won the latch; re-check the cache — the prior winner may
-            // have completed between our get() and putIfAbsent().
-            val nowCached = resultCache.get(cacheKey)
-            if (nowCached != null) {
-              fresh.complete(nowCached)
-              cachedResponse(nowCached._1, nowCached._2)
-            } else {
-              val (pair, stats) = try runQuery()
-              catch { case e: Throwable => fresh.completeExceptionally(e); throw e }
-              // Byte ceiling measured on the actual UTF-8 encoding (body
-              // data can carry non-ASCII ≥ 0x20, which q() passes through
-              // raw — String.length would undercount those up to 3×). An
-              // oversized result serves but is not retained.
-              if (pair._1.getBytes(StandardCharsets.UTF_8).length <= resultCacheMaxEntryBytes)
-                resultCache.put(cacheKey, pair)
-              fresh.complete(pair)
-              freshResponse(pair._1, pair._2, stats)
-            }
-          } finally {
-            // Belt-and-braces liveness: if anything above exited without
-            // completing the future (e.g. a VirtualMachineError between
-            // runQuery() returning and complete()), waiters already hold
-            // a reference to it and sit in an untimed get() — complete it
-            // exceptionally so they fail instead of blocking HTTP worker
-            // threads forever. No-op when already completed.
-            fresh.completeExceptionally(
-              new IllegalStateException("in-flight query abandoned before completion"))
-            inFlight.remove(cacheKey, fresh)
-          }
-        }
-      } else {
-        val (pair, stats) = runQuery()
-        freshResponse(pair._1, pair._2, stats)
-      }
+      var stats: Option[JobStats.Snapshot] = None // set iff THIS request ran
+      def run(): (String, String) = { val (answer, s) = runQuery(); stats = Some(s); answer }
+      val answer =
+        try
+          if (resultCacheSize == 0) run()
+          else results.getOrCompute(cacheKey, coalesceWaitSec, () => mCoalesced.incrementAndGet())(run())
+        catch { case e: Throwable => mQueryErrors.incrementAndGet(); throw e }
+      withStats(answer, stats)
     }
 
     if (boolArg(ex, "async")) submitAsync(ex, name)(execute())
@@ -839,17 +646,14 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(200, 0) // length 0 → chunked
       val out = ex.getResponseBody
+      def emit(line: String): Unit = { out.write((line + "\n").getBytes(StandardCharsets.UTF_8)); out.flush() }
       // Timed future get, not a sleep-poll (r16): the former 200ms poll
       // granularity added ~180ms p50 to every short stream request
       // (BENCH.md serving floor: stream p50 403ms vs sync 222ms) — the
       // waiter now wakes the instant the query completes, emitting a
       // progress line each second it doesn't.
-      val done = new java.util.concurrent.CompletableFuture[String]()
-      val t = new Thread(() => {
-        try done.complete(execute())
-        catch { case e: Throwable => done.completeExceptionally(e) }
-      }, "graft-query-stream")
-      t.start()
+      val done = java.util.concurrent.CompletableFuture.supplyAsync(() => execute(),
+        (r: Runnable) => new Thread(r, "graft-query-stream").start())
       var last: String = null
       var waited = 0L
       while (last == null) {
@@ -857,15 +661,12 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
         catch {
           case _: java.util.concurrent.TimeoutException =>
             waited += 1000
-            out.write(s"""{"stage": "RUNNING", "message": "query running", "elapsedMs": $waited}\n"""
-              .getBytes(StandardCharsets.UTF_8))
-            out.flush()
+            emit(s"""{"stage": "RUNNING", "message": "query running", "elapsedMs": $waited}""")
           case e: java.util.concurrent.ExecutionException =>
-            last = s"""{"errorMessage": ${q(String.valueOf(e.getCause.getMessage))}}"""
+            last = s"""{"errorMessage": ${q(e.getCause.getMessage)}}"""
         }
       }
-      out.write((last + "\n").getBytes(StandardCharsets.UTF_8))
-      out.flush()
+      emit(last)
     } else respond(ex, 200, execute())
   }
 
@@ -895,14 +696,10 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     // with the admission cap above, the un-evictable population is now
     // bounded by asyncThreads + asyncQueueMax).
     if (jobs.size > 1000) {
-      import scala.jdk.CollectionConverters._
       jobs.values.asScala.filter(j => j.stage == "DONE" || j.stage == "FAILED")
         .toSeq.sortBy(_.id.drop(1).toLong)
-        .dropRight(500).foreach { j =>
-          // Registry eviction releases the result-byte budget too — the
-          // removed entry's payload is unreachable.
-          if (jobs.remove(j.id) != null) dropRetained(j)
-        }
+        // A removed entry's payload is unreachable: release it too.
+        .dropRight(500).foreach(j => if (jobs.remove(j.id) != null) payloads.remove(j.id))
     }
     val id = s"q${jobSeq.incrementAndGet()}"
     val job = AsyncJob(id, dataset, stage = "QUEUED")
@@ -913,7 +710,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     try asyncPool.submit(new Runnable {
       override def run(): Unit = {
         job.stage = "RUNNING"
-        try retainResult(job, work)
+        // Payload first: a poller that sees DONE finds it, or its eviction.
+        try { payloads.put(id, work); job.stage = "DONE" }
         catch { case e: Throwable => job.error = Some(String.valueOf(e.getMessage)); job.stage = "FAILED" }
         finally pendingAsync.decrementAndGet()
       }
@@ -924,24 +722,23 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     respond(ex, 202, s"""{"queryId": ${q(id)}, "status": "/queries/$id/status"}""")
   }
 
-  private def queryStatus(ex: HttpExchange, id: String): Unit = {
-    // Lazy TTL expiry rides the poll itself: a status read past the TTL
-    // observes "resultEvicted", never a payload older than the bound.
-    sweepExpiredResults()
+  private def queryStatus(ex: HttpExchange, id: String): Unit =
     Option(jobs.get(id)) match {
       case None => respond(ex, 404, s"""{"errorMessage": "unknown query '$id'"}""")
       case Some(job) =>
-        val result = job.result.map(r => s""", "result": $r""").getOrElse("")
+        // The store read expires past-TTL payloads first, so a poll never
+        // observes a payload older than the bound.
+        val payload = if (job.stage == "DONE") payloads.get(id) else None
+        val result = payload.map(r => s""", "result": $r""").getOrElse("")
         val error = job.error.map(e => s""", "errorMessage": ${q(e)}""").getOrElse("")
-        // A DONE job whose payload fell to the retained-result byte budget
-        // says so: the late poller re-runs the query instead of reading
-        // "done with no result" as a server bug.
-        val evicted = if (job.resultEvicted) s""", "resultEvicted": true""" else ""
+        // A DONE job whose payload fell to the byte budget or the TTL says
+        // so: the late poller re-runs the query instead of reading "done
+        // with no result" as a server bug.
+        val evicted = if (job.stage == "DONE" && payload.isEmpty) s""", "resultEvicted": true""" else ""
         val done = job.stage == "DONE" || job.stage == "FAILED"
         respond(ex, 200,
           s"""{"queryId": ${q(job.id)}, "dataset": ${q(job.dataset)}, "stage": ${q(job.stage)}, "done": $done$error$evicted$result}""")
     }
-  }
 
   // ----------------------------------------------------------------- metrics
 
@@ -961,10 +758,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
   private val mCoreMs       = new AtomicLong()
 
   private def metrics(ex: HttpExchange): Unit = {
-    // A scrape is an observation of the registry: expired payloads drop
-    // BEFORE the gauges read, so an idle server's retained-bytes gauge
-    // reports 0 past the TTL instead of stale bytes nobody can reach.
-    sweepExpiredResults()
+    // The store gauges expire past-TTL payloads before they read, so an
+    // idle server's retained-bytes gauge reports 0 past the TTL.
     def m(name: String, kind: String, help: String, value: Long): String =
       s"# HELP $name $help\n# TYPE $name $kind\n$name $value\n"
     val body =
@@ -979,15 +774,12 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       m("graft_core_ms_total", "counter", "Executor-core milliseconds consumed by queries (cost basis)", mCoreMs.get) +
       m("graft_datasets_registered", "gauge", "Currently registered datasets", Catalog.list().size.toLong) +
       m("graft_query_rejected_total", "counter", "Async submissions rejected 429 at the queue cap", mRejected.get) +
-      m("graft_result_cache_entries", "gauge", "Entries currently in the versioned result cache", resultCache.size.toLong) +
-      m("graft_df_handle_entries", "gauge", "Per-registration DataFrame handles currently cached", dfHandles.size.toLong) +
+      m("graft_result_cache_entries", "gauge", "Entries currently in the versioned result cache", results.size.toLong) +
+      m("graft_df_handle_entries", "gauge", "Per-registration DataFrame handles currently cached", handles.size.toLong) +
       m("graft_async_jobs_pending", "gauge", "Async jobs admitted but not yet finished (QUEUED + RUNNING)", pendingAsync.get) +
-      m("graft_async_result_bytes_retained", "gauge", "UTF-8 bytes of async results currently retained in the job registry", retainedResultBytes.get) +
-      m("graft_inflight_coalescable_queries", "gauge", "Cold-key queries executing under the single-flight latch right now", inFlight.size.toLong)
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
-    ex.sendResponseHeaders(200, bytes.length)
-    ex.getResponseBody.write(bytes)
+      m("graft_async_result_bytes_retained", "gauge", "UTF-8 bytes of async results currently retained in the job registry", payloads.bytes) +
+      m("graft_inflight_coalescable_queries", "gauge", "Cold-key queries executing under the single-flight latch right now", results.pending.toLong)
+    respond(ex, 200, body, "text/plain; version=0.0.4; charset=utf-8")
   }
 
   // ----------------------------------------------------------------- plumbing
@@ -1001,24 +793,27 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     new String(bytes, StandardCharsets.UTF_8)
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(ex: HttpExchange, code: Int, body: String,
+                      contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
   }
-
-  private def q(s: String): String =
-    "\"" + Option(s).getOrElse("null").flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
+
+/** Result-store key: dataset name + registration version + the parsed
+  * query's case-class AST, compared STRUCTURALLY (r16). The r15 key
+  * rendered the AST through case-class `toString`, which does not quote
+  * embedded strings — a filter value containing AST-rendering text
+  * (`")), RowFilter("`…) could make two structurally different queries
+  * render identical keys, serving one query's cached result to the other
+  * (and riding its single-flight latch). The AST already has structural
+  * equality/hashCode, so the key holds it directly — no string rendering,
+  * no injection surface (pinned by the toString-collision test in
+  * ApiServerSpec). */
+private[server] final case class QueryKey(dataset: String, registeredAt: Long,
+                                          query: graft.query.QueryAst.GraftQuery)
 
 /** `runMain graft.server.ApiServerMain [port]` — serve until killed. */
 object ApiServerMain {

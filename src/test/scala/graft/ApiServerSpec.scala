@@ -1092,25 +1092,18 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("timed-out coalesce waiter re-checks and warms the result cache (r17)") {
-    // The wedged-winner scenario, made deterministic: a never-completing
-    // future is installed in the in-flight latch map for the exact
-    // QueryKey (white-box via reflection — production code has no test
-    // seam). With coalesceWaitSec=0 every arrival times out instantly:
-    //   waiter-1: cache miss → executes itself → MUST cache its result
-    //   waiter-2: cache re-check on timeout → MUST hit, zero execution
+    // The wedged-winner scenario, made deterministic: a latch nobody
+    // completes is claimed in the server's result store for the exact
+    // QueryKey (through the package-private test seam
+    // graft.server.ServerSeams). With coalesceWaitSec=0 every arrival
+    // times out instantly:
+    //   waiter-1: no value → executes itself → MUST keep its result
+    //   waiter-2: MUST hit, zero execution
     // Pre-r17, waiter-2 re-ran the full scan (fallback never consulted or
     // fed the cache), so every waiter behind a wedged winner paid serially.
     val s15 = new ApiServer(spark, 0, resultCacheSize = 8, coalesceWaitSec = 0)
     s15.start()
-    val inFlightField = classOf[ApiServer].getDeclaredFields
-      .find(_.getName.endsWith("inFlight"))
-      .getOrElse(fail("inFlight field not found"))
-    inFlightField.setAccessible(true)
-    val inFlightMap = inFlightField.get(s15)
-      .asInstanceOf[java.util.concurrent.ConcurrentHashMap[AnyRef,
-        java.util.concurrent.CompletableFuture[(String, String)]]]
-    val wedge = new java.util.concurrent.CompletableFuture[(String, String)]()
-    var wedgeKey: AnyRef = null
+    var wedge: java.util.concurrent.CompletableFuture[(String, String)] = null
     try {
       val b15 = s"http://127.0.0.1:${s15.boundPort}"
       def post15(path: String, body: String) = client.send(
@@ -1122,35 +1115,26 @@ class ApiServerSpec extends SparkSpec {
           | "groupIdColumn": "user_id", "timestampColumn": "ts"}""".stripMargin)
       assert(reg.statusCode() == 200, reg.body())
       val queryBody = """{"query": {}}"""
-      // Build the same QueryKey the server builds: (dataset, registeredAt,
-      // parsed AST) — structural AST equality is what makes this land on
-      // the identical latch entry (the r16 key design under test).
-      val ds = graft.catalog.Catalog.get("evwedge").get
-      val qkCtor = Class.forName("graft.server.ApiServer$QueryKey")
-        .getDeclaredConstructors.head
-      qkCtor.setAccessible(true)
-      wedgeKey = qkCtor.newInstance(s15, ds.name,
-        java.lang.Long.valueOf(ds.registeredAt),
-        graft.query.QueryParser.parse(queryBody)).asInstanceOf[AnyRef]
-      inFlightMap.put(wedgeKey,
-        wedge.asInstanceOf[java.util.concurrent.CompletableFuture[(String, String)]])
+      // The seam builds the same QueryKey the server builds: (dataset,
+      // registeredAt, parsed AST) — structural AST equality is what makes
+      // this land on the identical latch entry (the r16 key design under
+      // test).
+      wedge = graft.server.ServerSeams.claimResult(s15, "evwedge", queryBody)
 
       // Waiter-1: times out on the wedge, finds no cache entry, executes.
       val w1 = post15("/datasets/evwedge/query", queryBody)
       assert(w1.statusCode() == 200, w1.body())
       assert(w1.body().contains(""""cached": false"""), w1.body())
       assert(w1.body().contains(""""matchingGroups": 15"""), w1.body())
-      // Waiter-2: the wedge still holds the latch — the timeout path must
-      // answer from waiter-1's cached result, not run a second scan
-      // (cached response ⇒ the zero-cost stats block).
+      // Waiter-2: must answer from the result waiter-1 kept, not run a
+      // second scan (cached response ⇒ the zero-cost stats block).
       val w2 = post15("/datasets/evwedge/query", queryBody)
       assert(w2.statusCode() == 200, w2.body())
       assert(w2.body().contains(""""cached": true"""), w2.body())
       assert(w2.body().contains(""""matchingGroups": 15"""), w2.body())
       assert(w2.body().contains(""""rowsScanned": 0"""), w2.body())
     } finally {
-      wedge.completeExceptionally(new IllegalStateException("test wedge released"))
-      if (wedgeKey != null) inFlightMap.remove(wedgeKey)
+      if (wedge != null) wedge.completeExceptionally(new IllegalStateException("test wedge released"))
       s15.stop()
       graft.catalog.Catalog.unregister("evwedge")
     }
